@@ -42,6 +42,7 @@ import datetime as dt
 import decimal
 import math
 from decimal import Decimal
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -223,6 +224,33 @@ def _const(series: pd.Series):
     return series.iloc[0]
 
 
+def _is_none(v) -> bool:
+    return v is None
+
+
+def _is_none_or_nan(v) -> bool:
+    return v is None or (isinstance(v, float) and math.isnan(v))
+
+
+def _map_batch(values: pd.Series, mask, deterministic: bool, is_null=_is_none) -> list:
+    """Mask one Arrow batch value by value; nulls (per ``is_null``) stay
+    NULL. Deterministic digests are memoized per batch (real data repeats
+    values); random-mode output is never cached."""
+    cache: dict = {}
+    out = []
+    for v in values:
+        if is_null(v):
+            out.append(None)
+        elif deterministic and v in cache:
+            out.append(cache[v])
+        else:
+            m = mask(v)
+            if deterministic:
+                cache[v] = m
+            out.append(m)
+    return out
+
+
 def register_udfs(
     spark: SparkSession,
     codec: Codec | None = None,
@@ -240,19 +268,8 @@ def register_udfs(
     passphrase = passphrase or get_passphrase()
 
     def _mask_string_batch(length, alphabet, fmt, deterministic, values: pd.Series):
-        cache: dict[str, str] = {}
-        out = []
-        for v in values:
-            if v is None:
-                out.append(None)
-            elif deterministic and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_string_value(codec, passphrase, length, alphabet, fmt, deterministic, v)
-                if deterministic:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        mask = partial(mask_string_value, codec, passphrase, length, alphabet, fmt, deterministic)
+        return pd.Series(_map_batch(values, mask, deterministic), dtype="object")
 
     @pandas_udf(StringType())
     def mask_string(length, deterministic, value):
@@ -279,72 +296,28 @@ def register_udfs(
     @pandas_udf(DateType())
     def mask_date(range_, deterministic, value):
         r, det = int(_const(range_)), bool(_const(deterministic))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None or (isinstance(v, float) and math.isnan(v)):
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_date_value(codec, passphrase, r, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        mask = partial(mask_date_value, codec, passphrase, r, det)
+        return pd.Series(_map_batch(value, mask, det, _is_none_or_nan), dtype="object")
 
     @pandas_udf(TimestampType())
     def mask_timestamp(range_, deterministic, value):
         r, det = int(_const(range_)), bool(_const(deterministic))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None or pd.isna(v):
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_timestamp_value(codec, passphrase, r, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out)
+        mask = partial(mask_timestamp_value, codec, passphrase, r, det)
+        return pd.Series(_map_batch(value, mask, det, pd.isna))
 
     @pandas_udf(DecimalType(38, 18))
     def mask_decimal(range_, deterministic, value):
         r, det = _const(range_), bool(_const(deterministic))
         if r is not None and not isinstance(r, Decimal):
             r = Decimal(str(r))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None:
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_decimal_value(codec, passphrase, r, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        mask = partial(mask_decimal_value, codec, passphrase, r, det)
+        return pd.Series(_map_batch(value, mask, det), dtype="object")
 
     @pandas_udf(StringType())
     def mask_credit_card(deterministic, value):
         det = bool(_const(deterministic))
-        cache: dict = {}
-        out = []
-        for v in value:
-            if v is None:
-                out.append(None)
-            elif det and v in cache:
-                out.append(cache[v])
-            else:
-                m = mask_credit_card_value(codec, passphrase, det, v)
-                if det:
-                    cache[v] = m
-                out.append(m)
-        return pd.Series(out, dtype="object")
+        mask = partial(mask_credit_card_value, codec, passphrase, det)
+        return pd.Series(_map_batch(value, mask, det), dtype="object")
 
     # deterministic=false returns SecureRandom bytes → the functions must be
     # nondeterministic or Catalyst may common-subexpression-eliminate calls.

@@ -46,9 +46,6 @@ class PipelineStage:
     """Base stage. Subclasses set ``stage_type`` and implement ``run``."""
 
     stage_type: str = "?"
-    # config keys accepted beyond the universal ones, for validation parity
-    # with the reference's checkValidKeys (MaskDataTransform.scala:52-59)
-    expected_keys: tuple[str, ...] = ()
 
     def __init__(
         self,
@@ -87,3 +84,18 @@ class PipelineStage:
             elapsed_ms = (time.monotonic() - t0) * 1000
             self.stage_detail["records"] = count
             self.stage_detail["rate"] = int(elapsed_ms / count) if count else 0
+
+
+def format_options(stage: PipelineStage, given: dict) -> dict:
+    """Resolve a format stage's ``options`` table (config key → (Spark
+    option, default)) against the config keys ``given``; options whose value
+    is ``None`` are left out. Unknown keys are rejected like any other
+    unexpected keyword argument."""
+    unknown = sorted(set(given) - set(stage.options))
+    if unknown:
+        raise TypeError(
+            f"{type(stage).__name__}() got unexpected keyword argument(s) "
+            + ", ".join(f"'{k}'" for k in unknown)
+        )
+    opts = {option: given.get(key, default) for key, (option, default) in stage.options.items()}
+    return {option: value for option, value in opts.items() if value is not None}

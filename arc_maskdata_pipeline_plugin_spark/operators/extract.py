@@ -7,160 +7,99 @@ host Arc framework provides. All are thin wrappers over ``spark.read`` so
 Catalyst/DSv2 handle pushdown, pruning, and split planning — at 100 TB the
 scan IS the query plan's foundation, so nothing custom sits between the
 format and Spark.
+
+Each file-format source is a declaration over :class:`Extract`: its
+``stage_type``, the Spark ``format`` and its ``options`` table.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .base import PipelineContext, PipelineStage
+from .base import PipelineContext, PipelineStage, format_options
 
 
-class DelimitedExtract(PipelineStage):
+class Extract(PipelineStage):
+    """``spark.read`` (or ``readStream``) of ``format`` → optional
+    repartition → ``output_view``.
+
+    ``options`` maps each format-specific config key to the reader option it
+    sets and that option's default; a ``None`` value leaves the option to
+    Spark. ``schema``, ``num_partitions`` and ``streaming`` apply to every
+    format."""
+
+    format: str
+    options: dict[str, tuple[str, object]] = {}
+
+    def __init__(
+        self,
+        name: str,
+        input_uri: str,
+        output_view: str,
+        schema=None,
+        num_partitions: int | None = None,
+        streaming: bool = False,
+        description: str | None = None,
+        environments: list[str] | None = None,
+        **options,
+    ):
+        super().__init__(name, description, environments)
+        self.input_uri = input_uri
+        self.output_view = output_view
+        self.schema = schema
+        self.num_partitions = num_partitions
+        self.streaming = streaming
+        self.reader_options = format_options(self, options)
+
+    def load(self, reader) -> DataFrame:
+        return reader.load(self.input_uri)
+
+    def run(self, ctx: PipelineContext) -> DataFrame:
+        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
+        reader = reader.format(self.format).options(**self.reader_options)
+        if self.schema is not None:
+            reader = reader.schema(self.schema)
+        df = self.load(reader)
+        if self.num_partitions:
+            df = df.repartition(self.num_partitions)
+        ctx.register_view(df, self.output_view)
+        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
+        return df
+
+
+class DelimitedExtract(Extract):
     stage_type = "DelimitedExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        header: bool = True,
-        delimiter: str = ",",
-        quote: str = '"',
-        infer_schema: bool = False,
-        multi_line: bool = False,
-        num_partitions: int | None = None,
-        streaming: bool = False,
-        schema=None,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.header = header
-        self.delimiter = delimiter
-        self.quote = quote
-        self.infer_schema = infer_schema
-        self.multi_line = multi_line
-        self.num_partitions = num_partitions
-        self.streaming = streaming
-        self.schema = schema
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
-        reader = (
-            reader.format("csv")
-            .option("header", self.header)
-            .option("sep", self.delimiter)
-            .option("quote", self.quote)
-            .option("multiLine", self.multi_line)
-        )
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        elif self.infer_schema and not self.streaming:
-            reader = reader.option("inferSchema", True)
-        df = reader.load(self.input_uri)
-        if self.num_partitions:
-            df = df.repartition(self.num_partitions)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "csv"
+    options = {
+        "header": ("header", True),
+        "delimiter": ("sep", ","),
+        "quote": ("quote", '"'),
+        "multi_line": ("multiLine", False),
+        # ignored by Spark when a schema is given
+        "infer_schema": ("inferSchema", None),
+    }
 
 
-class ParquetExtract(PipelineStage):
+class ParquetExtract(Extract):
     stage_type = "ParquetExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        num_partitions: int | None = None,
-        streaming: bool = False,
-        merge_schema: bool = False,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.num_partitions = num_partitions
-        self.streaming = streaming
-        # schema drift is a fact of life for a years-old 100 TB dataset;
-        # mergeSchema unions footers across files (costlier listing, so opt-in)
-        self.merge_schema = merge_schema
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
-        if self.merge_schema:
-            reader = reader.option("mergeSchema", True)
-        df = reader.parquet(self.input_uri)
-        if self.num_partitions:
-            df = df.repartition(self.num_partitions)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "parquet"
+    # schema drift is a fact of life for a years-old 100 TB dataset;
+    # mergeSchema unions footers across files (costlier listing, so opt-in)
+    options = {"merge_schema": ("mergeSchema", None)}
 
 
-class JSONExtract(PipelineStage):
+class JSONExtract(Extract):
     stage_type = "JSONExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        multi_line: bool = False,
-        schema=None,
-        streaming: bool = False,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.multi_line = multi_line
-        self.schema = schema
-        self.streaming = streaming
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
-        reader = reader.format("json").option("multiLine", self.multi_line)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        df = reader.load(self.input_uri)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "json"
+    options = {"multi_line": ("multiLine", False)}
 
 
-class ORCExtract(PipelineStage):
+class ORCExtract(Extract):
     stage_type = "ORCExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        num_partitions: int | None = None,
-        streaming: bool = False,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.num_partitions = num_partitions
-        self.streaming = streaming
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
-        df = reader.orc(self.input_uri)
-        if self.num_partitions:
-            df = df.repartition(self.num_partitions)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "orc"
 
 
-class TextExtract(PipelineStage):
+class TextExtract(Extract):
     """Line-per-row (or whole-file-per-row) text source.
 
     ``whole_text=True`` gives one row per file — the right granularity for
@@ -169,36 +108,11 @@ class TextExtract(PipelineStage):
     """
 
     stage_type = "TextExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        whole_text: bool = False,
-        line_sep: str | None = None,
-        streaming: bool = False,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.whole_text = whole_text
-        self.line_sep = line_sep
-        self.streaming = streaming
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
-        reader = reader.format("text").option("wholetext", self.whole_text)
-        if self.line_sep is not None:
-            reader = reader.option("lineSep", self.line_sep)
-        df = reader.load(self.input_uri)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "text"
+    options = {"whole_text": ("wholetext", False), "line_sep": ("lineSep", None)}
 
 
-class BinaryFileExtract(PipelineStage):
+class BinaryFileExtract(Extract):
     """Opaque-binary source for multimodal ingestion (images/audio/video).
 
     Spark's built-in ``binaryFile`` format yields
@@ -211,60 +125,32 @@ class BinaryFileExtract(PipelineStage):
     """
 
     stage_type = "BinaryFileExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        path_glob_filter: str | None = None,
-        recursive: bool = False,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.path_glob_filter = path_glob_filter
-        self.recursive = recursive
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.read.format("binaryFile")
-        if self.path_glob_filter:
-            reader = reader.option("pathGlobFilter", self.path_glob_filter)
-        if self.recursive:
-            reader = reader.option("recursiveFileLookup", True)
-        df = reader.load(self.input_uri)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "binaryFile"
+    options = {
+        "path_glob_filter": ("pathGlobFilter", None),
+        "recursive": ("recursiveFileLookup", None),
+    }
 
 
-class AvroExtract(PipelineStage):
+class AvroExtract(Extract):
     """Avro source. Spark ships the `avro` format in the external
     spark-avro module; when the jar is absent, fail with a clear message
     instead of Spark's ClassNotFound chain."""
 
     stage_type = "AvroExtract"
+    format = "avro"
 
-    def __init__(self, name: str, input_uri: str, output_view: str, **kw):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
+    def load(self, reader) -> DataFrame:
         try:
-            df = ctx.spark.read.format("avro").load(self.input_uri)
+            return super().load(reader)
         except Exception as exc:  # noqa: BLE001
             raise RuntimeError(
                 "AvroExtract requires the spark-avro module on the classpath "
                 "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
             ) from exc
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
 
 
-class XMLExtract(PipelineStage):
+class XMLExtract(Extract):
     """XML source — built into Spark since 4.0 (no external spark-xml jar).
 
     ``row_tag`` selects the repeating element that becomes one row; schema
@@ -272,33 +158,8 @@ class XMLExtract(PipelineStage):
     give one at scale — inference is an extra full pass over 100 TB)."""
 
     stage_type = "XMLExtract"
-
-    def __init__(
-        self,
-        name: str,
-        input_uri: str,
-        output_view: str,
-        row_tag: str = "row",
-        schema=None,
-        streaming: bool = False,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_uri = input_uri
-        self.output_view = output_view
-        self.row_tag = row_tag
-        self.schema = schema
-        self.streaming = streaming
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        reader = ctx.spark.readStream if self.streaming else ctx.spark.read
-        reader = reader.format("xml").option("rowTag", self.row_tag)
-        if self.schema is not None:
-            reader = reader.schema(self.schema)
-        df = reader.load(self.input_uri)
-        ctx.register_view(df, self.output_view)
-        self.stage_detail.update(inputURI=self.input_uri, outputView=self.output_view)
-        return df
+    format = "xml"
+    options = {"row_tag": ("rowTag", "row")}
 
 
 class JDBCExtract(PipelineStage):

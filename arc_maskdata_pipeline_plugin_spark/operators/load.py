@@ -1,4 +1,6 @@
-"""Sink stages. Thin wrappers over ``df.write`` / ``df.writeStream``.
+"""Sink stages. Thin wrappers over ``df.write``: each file-format sink is a
+declaration over :class:`Load` (``stage_type``, Spark ``format``,
+``options`` table).
 
 At scale: ``partition_by`` maps to hive-style directory partitioning (the
 unit of partition pruning for downstream readers); ``num_partitions``
@@ -10,193 +12,85 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from .base import PipelineContext, PipelineStage
+from .base import PipelineContext, PipelineStage, format_options
 
 
-class ParquetLoad(PipelineStage):
+class Load(PipelineStage):
+    """``input_view`` → optional repartition → ``df.write`` of ``format``.
+
+    ``options`` maps each format-specific config key to the writer option it
+    sets and that option's default; a ``None`` value leaves the option to
+    Spark. ``mode``, ``partition_by`` and ``num_partitions`` apply to every
+    format."""
+
+    format: str
+    options: dict[str, tuple[str, object]] = {}
+
+    def __init__(
+        self,
+        name: str,
+        input_view: str,
+        output_uri: str,
+        mode: str = "overwrite",
+        partition_by: list[str] | None = None,
+        num_partitions: int | None = None,
+        description: str | None = None,
+        environments: list[str] | None = None,
+        **options,
+    ):
+        super().__init__(name, description, environments)
+        self.input_view = input_view
+        self.output_uri = output_uri
+        self.mode = mode
+        self.partition_by = partition_by or []
+        self.num_partitions = num_partitions
+        self.writer_options = format_options(self, options)
+
+    def run(self, ctx: PipelineContext) -> DataFrame:
+        df = ctx.spark.table(self.input_view)
+        out = df.repartition(self.num_partitions) if self.num_partitions else df
+        writer = out.write.mode(self.mode).format(self.format).options(**self.writer_options)
+        if self.partition_by:
+            writer = writer.partitionBy(*self.partition_by)
+        writer.save(self.output_uri)
+        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
+        return df
+
+
+class ParquetLoad(Load):
     stage_type = "ParquetLoad"
-
-    def __init__(
-        self,
-        name: str,
-        input_view: str,
-        output_uri: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-        num_partitions: int | None = None,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.mode = mode
-        self.partition_by = partition_by or []
-        self.num_partitions = num_partitions
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        df = ctx.spark.table(self.input_view)
-        out = df.repartition(self.num_partitions) if self.num_partitions else df
-        writer = out.write.mode(self.mode)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.parquet(self.output_uri)
-        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
-        return df
+    format = "parquet"
 
 
-class DelimitedLoad(PipelineStage):
+class DelimitedLoad(Load):
     stage_type = "DelimitedLoad"
-
-    def __init__(
-        self,
-        name: str,
-        input_view: str,
-        output_uri: str,
-        header: bool = True,
-        delimiter: str = ",",
-        mode: str = "overwrite",
-        num_partitions: int | None = None,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.header = header
-        self.delimiter = delimiter
-        self.mode = mode
-        self.num_partitions = num_partitions
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        df = ctx.spark.table(self.input_view)
-        out = df.repartition(self.num_partitions) if self.num_partitions else df
-        (
-            out.write.mode(self.mode)
-            .option("header", self.header)
-            .option("sep", self.delimiter)
-            .csv(self.output_uri)
-        )
-        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
-        return df
+    format = "csv"
+    options = {"header": ("header", True), "delimiter": ("sep", ",")}
 
 
-class JSONLoad(PipelineStage):
+class JSONLoad(Load):
     stage_type = "JSONLoad"
-
-    def __init__(
-        self,
-        name: str,
-        input_view: str,
-        output_uri: str,
-        mode: str = "overwrite",
-        num_partitions: int | None = None,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.mode = mode
-        self.num_partitions = num_partitions
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        df = ctx.spark.table(self.input_view)
-        out = df.repartition(self.num_partitions) if self.num_partitions else df
-        out.write.mode(self.mode).json(self.output_uri)
-        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
-        return df
+    format = "json"
 
 
-class ORCLoad(PipelineStage):
+class ORCLoad(Load):
     stage_type = "ORCLoad"
-
-    def __init__(
-        self,
-        name: str,
-        input_view: str,
-        output_uri: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-        num_partitions: int | None = None,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.mode = mode
-        self.partition_by = partition_by or []
-        self.num_partitions = num_partitions
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        df = ctx.spark.table(self.input_view)
-        out = df.repartition(self.num_partitions) if self.num_partitions else df
-        writer = out.write.mode(self.mode)
-        if self.partition_by:
-            writer = writer.partitionBy(*self.partition_by)
-        writer.orc(self.output_uri)
-        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
-        return df
+    format = "orc"
 
 
-class XMLLoad(PipelineStage):
+class XMLLoad(Load):
     """XML sink — built into Spark since 4.0 (``rowTag`` element per row)."""
 
     stage_type = "XMLLoad"
-
-    def __init__(
-        self,
-        name: str,
-        input_view: str,
-        output_uri: str,
-        row_tag: str = "row",
-        root_tag: str = "rows",
-        mode: str = "overwrite",
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.row_tag = row_tag
-        self.root_tag = root_tag
-        self.mode = mode
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        df = ctx.spark.table(self.input_view)
-        (
-            df.write.mode(self.mode)
-            .format("xml")
-            .option("rowTag", self.row_tag)
-            .option("rootTag", self.root_tag)
-            .save(self.output_uri)
-        )
-        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
-        return df
+    format = "xml"
+    options = {"row_tag": ("rowTag", "row"), "root_tag": ("rootTag", "rows")}
 
 
-class TextLoad(PipelineStage):
+class TextLoad(Load):
     """Single-string-column text sink (one line per row)."""
 
     stage_type = "TextLoad"
-
-    def __init__(
-        self,
-        name: str,
-        input_view: str,
-        output_uri: str,
-        mode: str = "overwrite",
-        num_partitions: int | None = None,
-        **kw,
-    ):
-        super().__init__(name, **kw)
-        self.input_view = input_view
-        self.output_uri = output_uri
-        self.mode = mode
-        self.num_partitions = num_partitions
-
-    def run(self, ctx: PipelineContext) -> DataFrame:
-        df = ctx.spark.table(self.input_view)
-        out = df.repartition(self.num_partitions) if self.num_partitions else df
-        out.write.mode(self.mode).text(self.output_uri)
-        self.stage_detail.update(inputView=self.input_view, outputURI=self.output_uri)
-        return df
+    format = "text"
 
 
 class CompactParquet(PipelineStage):

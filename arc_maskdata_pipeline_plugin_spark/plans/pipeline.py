@@ -14,46 +14,22 @@ import re
 
 from pyspark.sql import DataFrame
 
-from ..operators import (
-    DelimitedExtract,
-    DelimitedLoad,
-    JSONExtract,
-    MaskDataTransform,
-    ParquetExtract,
-    ParquetLoad,
-    PipelineContext,
-    PipelineStage,
-    SQLTransform,
-    StageError,
-    TypingTransform,
-)
+from .. import operators
+from ..operators import PipelineContext, PipelineStage, StageError
 
+# every stage class ``operators`` exports, keyed by its config ``type``
 STAGE_TYPES: dict[str, type[PipelineStage]] = {
     cls.stage_type: cls
-    for cls in (
-        DelimitedExtract,
-        ParquetExtract,
-        JSONExtract,
-        TypingTransform,
-        SQLTransform,
-        MaskDataTransform,
-        ParquetLoad,
-        DelimitedLoad,
-    )
+    for cls in vars(operators).values()
+    if isinstance(cls, type) and issubclass(cls, PipelineStage) and cls is not PipelineStage
 }
 
-
-def register_stage(cls: type[PipelineStage]) -> type[PipelineStage]:
-    """Plugin hook — the ServiceLoader-manifest equivalent."""
-    STAGE_TYPES[cls.stage_type] = cls
-    return cls
-
-
-_CAMEL = re.compile(r"(?<!^)(?=[A-Z])")
+# camelCase → snake_case; an acronym stays one word (inputURI → input_uri)
+_CAMEL = re.compile(r"(?<=[a-z0-9])(?=[A-Z])")
 
 
 def _snake(key: str) -> str:
-    return _CAMEL.sub("_", key).lower().replace("_u_r_i", "_uri")
+    return _CAMEL.sub("_", key).lower()
 
 
 def stage_from_config(index: int, conf: dict) -> PipelineStage:
@@ -100,10 +76,10 @@ class Pipeline:
             except StageError as e:
                 errors.append(e)
         if errors:
+            # the first stage's prefix comes from the raised error itself
+            first = errors[0]
             raise StageError(
-                errors[0].index,
-                errors[0].name,
-                [str(e) for e in errors],
+                first.index, first.name, first.errors + [str(e) for e in errors[1:]]
             )
         return cls(stages)
 

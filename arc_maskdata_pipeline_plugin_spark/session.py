@@ -63,11 +63,7 @@ def get_spark(
         # partitions). Scale-adaptive by construction: AQE sizes partitions
         # from actual bytes, so at 100 TB a big cached frame keeps its
         # parallelism while small broadcast-side frames stop fanning out.
-        # (env-overridable for A/B: SPARK_GRAFT_CACHED_PLAN_AQE=false)
-        .config(
-            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-            os.environ.get("SPARK_GRAFT_CACHED_PLAN_AQE", "true"),
-        )
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -87,15 +83,11 @@ def get_spark(
         # 2-4x with no plan change). Bounded retention + a 2-minute
         # periodic-GC floor keeps the session flat; both are pure
         # metadata/cleanup knobs that change no query result.
-        # (env-overridable for A/B: SPARK_GRAFT_PERIODIC_GC=30min)
         .config("spark.sql.ui.retainedExecutions", "50")
         .config("spark.ui.retainedJobs", "100")
         .config("spark.ui.retainedStages", "100")
         .config("spark.ui.retainedTasks", "2000")
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
     )

@@ -5,6 +5,7 @@
 # three driver-facing checks run back-to-back in a clean shell):
 #
 #   1.  full pytest suite
+#   1b. the benchmark harness's own tests (perfbench/tests)
 #   2.  Spark-vs-DuckDB oracle parity over every registered query
 #   2b. gate config-matrix: stock 200 shuffle partitions (the driver's
 #       session — the config that exposed the r10 global_rank escape)
@@ -27,6 +28,13 @@ if python -m pytest "$HERE/tests" -q >"$LOGS/pytest.log" 2>&1; then
   tail -1 "$LOGS/pytest.log"
 else
   fail=1; echo "PYTEST FAILED:"; tail -20 "$LOGS/pytest.log"
+fi
+
+echo "== [1b] perfbench tests =="
+if python -m pytest "$HERE/perfbench/tests" -q >"$LOGS/perfbench.log" 2>&1; then
+  tail -1 "$LOGS/perfbench.log"
+else
+  fail=1; echo "PERFBENCH TESTS FAILED:"; tail -20 "$LOGS/perfbench.log"
 fi
 
 echo "== [2/3] oracle parity ($SF_DIR) =="

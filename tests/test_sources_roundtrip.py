@@ -139,3 +139,134 @@ def test_xml_roundtrip(spark, ctx, tmp_path):
         schema="id INT, name STRING, score DOUBLE",
     ).execute(ctx)
     assert _rows(out.select("id", "name", "score")) == _rows(spark.table("xml_in"))
+
+
+# ---------------------------------------------------------------------------
+# Config-driven stages: every source/sink through Pipeline.from_config with
+# the camelCase HOCON keys, not direct construction.
+# ---------------------------------------------------------------------------
+
+from arc_maskdata_pipeline_plugin_spark.operators import StageError  # noqa: E402
+from arc_maskdata_pipeline_plugin_spark.plans.pipeline import (  # noqa: E402
+    STAGE_TYPES,
+    Pipeline,
+)
+
+_TYPED = 'schema = "id INT, name STRING, score DOUBLE"'
+
+
+@pytest.mark.parametrize(
+    "fmt, sink_keys, source_keys",
+    [
+        ("ORC", "", ""),
+        ("Parquet", "partitionBy = [id]", "mergeSchema = true"),
+        ("JSON", "", _TYPED),
+        ("Text", "", "lineSep = \"\\n\""),
+        ("XML", "rowTag = rec", f"rowTag = rec\n{_TYPED}"),
+        ("Delimited", 'delimiter = ";"', f'delimiter = ";"\nquote = "\\""\n{_TYPED}'),
+    ],
+)
+def test_roundtrip_from_config(spark, ctx, tmp_path, fmt, sink_keys, source_keys):
+    if fmt == "Text":
+        frame = spark.createDataFrame([("line;one",), ("line two",)], "value STRING")
+    else:
+        frame = spark.createDataFrame(
+            [(1, "al;pha", 1.5), (2, "beta", -2.0), (3, None, 0.0)],
+            "id INT, name STRING, score DOUBLE",
+        )
+    frame.createOrReplaceTempView("cfg_in")
+    uri = str(tmp_path / "out")
+    pipeline = Pipeline.from_config(f"""
+    stages = [
+      {{
+        type = {fmt}Load
+        name = write
+        inputView = cfg_in
+        outputURI = "{uri}"
+        mode = overwrite
+        numPartitions = 2
+        {sink_keys}
+      }}
+      {{
+        type = {fmt}Extract
+        name = read
+        inputURI = "{uri}"
+        outputView = cfg_back
+        numPartitions = 2
+        {source_keys}
+      }}
+    ]
+    """)
+    out = pipeline.run(ctx)
+    assert _rows(out.select(*frame.columns)) == _rows(frame)
+    assert spark.table("cfg_back").rdd.getNumPartitions() == 2
+    assert [d["type"] for d in ctx.details] == [f"{fmt}Load", f"{fmt}Extract"]
+
+
+# one config per stage type, every key camelCase as in HOCON
+_CONFIGS = {
+    "DelimitedExtract": dict(
+        inputURI="/in", outputView="v", header=False, delimiter="|", quote="'",
+        multiLine=True, inferSchema=True, schema="a INT", numPartitions=4, streaming=True,
+    ),
+    "ParquetExtract": dict(inputURI="/in", outputView="v", mergeSchema=True),
+    "JSONExtract": dict(inputURI="/in", outputView="v", multiLine=True, schema="a INT"),
+    "ORCExtract": dict(inputURI="/in", outputView="v", numPartitions=4),
+    "TextExtract": dict(inputURI="/in", outputView="v", wholeText=True, lineSep="\r\n"),
+    "BinaryFileExtract": dict(
+        inputURI="/in", outputView="v", pathGlobFilter="*.png", recursive=True
+    ),
+    "AvroExtract": dict(inputURI="/in", outputView="v", streaming=True),
+    "XMLExtract": dict(inputURI="/in", outputView="v", rowTag="rec", schema="a INT"),
+    "JDBCExtract": dict(
+        jdbcURL="jdbc:postgresql://db/x", table="t", outputView="v",
+        partitionColumn="id", lowerBound=0, upperBound=100, numPartitions=4,
+        fetchSize=500, properties={"user": "u"},
+    ),
+    "ParquetLoad": dict(inputView="v", outputURI="/out", partitionBy=["a"], numPartitions=4),
+    "DelimitedLoad": dict(inputView="v", outputURI="/out", header=False, delimiter="|"),
+    "JSONLoad": dict(inputView="v", outputURI="/out", mode="append"),
+    "ORCLoad": dict(inputView="v", outputURI="/out", partitionBy=["a"]),
+    "TextLoad": dict(inputView="v", outputURI="/out", numPartitions=1),
+    "XMLLoad": dict(inputView="v", outputURI="/out", rowTag="rec", rootTag="recs"),
+    "CompactParquet": dict(inputURI="/in", outputURI="/out", targetFileMb=64, partitionBy=["a"]),
+    "TypingTransform": dict(
+        inputView="v", outputView="w", schema=[{"name": "a", "type": "integer"}], persist=True
+    ),
+    "SQLTransform": dict(sql="SELECT ${x}", sqlParams={"x": "1"}, outputView="w"),
+    "MaskDataTransform": dict(inputView="v", outputView="w", persist=True, params={}),
+}
+
+# the Spark options the format-specific keys above must reach
+_OPTIONS = {
+    "DelimitedExtract": {
+        "header": False, "sep": "|", "quote": "'", "multiLine": True, "inferSchema": True,
+    },
+    "ParquetExtract": {"mergeSchema": True},
+    "JSONExtract": {"multiLine": True},
+    "TextExtract": {"wholetext": True, "lineSep": "\r\n"},
+    "BinaryFileExtract": {"pathGlobFilter": "*.png", "recursiveFileLookup": True},
+    "XMLExtract": {"rowTag": "rec"},
+    "DelimitedLoad": {"header": False, "sep": "|"},
+    "XMLLoad": {"rowTag": "rec", "rootTag": "recs"},
+}
+
+
+def test_every_stage_type_has_a_config():
+    assert set(STAGE_TYPES) == set(_CONFIGS)
+
+
+@pytest.mark.parametrize("stage_type", sorted(_CONFIGS))
+def test_stage_builds_from_config(stage_type):
+    conf = {"type": stage_type, "name": "s", **_CONFIGS[stage_type]}
+    (stage,) = Pipeline.from_config({"stages": [conf]}).stages
+    assert type(stage) is STAGE_TYPES[stage_type]
+    built = {**getattr(stage, "reader_options", {}), **getattr(stage, "writer_options", {})}
+    assert built == _OPTIONS.get(stage_type, {})
+
+
+@pytest.mark.parametrize("stage_type", sorted(_CONFIGS))
+def test_unknown_key_raises_stage_error(stage_type):
+    conf = {"type": stage_type, "name": "s", **_CONFIGS[stage_type], "noSuchKey": 1}
+    with pytest.raises(StageError, match="no_such_key"):
+        Pipeline.from_config({"stages": [conf]})

@@ -19,7 +19,7 @@ from arc_maskdata_pipeline_plugin_spark.functions.datetime_patterns import (
 from arc_maskdata_pipeline_plugin_spark.functions.masking import register_udfs
 from arc_maskdata_pipeline_plugin_spark.operators import PipelineContext, StageError
 from arc_maskdata_pipeline_plugin_spark.operators.mask import compile_mask_expressions
-from arc_maskdata_pipeline_plugin_spark.plans.pipeline import Pipeline
+from arc_maskdata_pipeline_plugin_spark.plans.pipeline import Pipeline, _snake
 
 CSV = """username,birth_date,create_date,balance,city
   alice  ,12/05/1996,Wed Aug 17 1983 21:57:14 GMT+1000 (Australian Eastern Standard Time),1234.56,Sydney
@@ -196,12 +196,35 @@ def test_persist_instrumentation(pipeline_result):
 
 
 def test_stage_error_accumulation():
-    with pytest.raises(StageError, match="unknown stage type"):
+    with pytest.raises(StageError, match="unknown stage type") as exc:
         Pipeline.from_config({"stages": [{"type": "NopeExtract", "name": "x"}]})
+    assert str(exc.value) == "stage 0 'x': unknown stage type 'NopeExtract'"
+    with pytest.raises(StageError) as exc:
+        Pipeline.from_config(
+            {"stages": [{"type": "NopeExtract", "name": "x"}, {"name": "y"}]}
+        )
+    assert str(exc.value) == (
+        "stage 0 'x': unknown stage type 'NopeExtract'; stage 1 'y': missing 'type'"
+    )
     with pytest.raises(StageError):
         Pipeline.from_config(
             {"stages": [{"type": "SQLTransform", "name": "no sql", "outputView": "v"}]}
         )
+
+
+@pytest.mark.parametrize(
+    "key, expected",
+    [
+        ("inputURI", "input_uri"),
+        ("outputURI", "output_uri"),
+        ("jdbcURL", "jdbc_url"),
+        ("pathGlobFilter", "path_glob_filter"),
+        ("numPartitions", "num_partitions"),
+        ("sqlParams", "sql_params"),
+    ],
+)
+def test_config_key_snake_case(key, expected):
+    assert _snake(key) == expected
 
 
 def test_mask_error_paths(spark):
@@ -228,34 +251,6 @@ def test_pattern_translation():
         java_to_strptime("EEE MMM dd uuuu HH:mm:ss 'GMT'Z '(X)'")
         == "%a %b %d %Y %H:%M:%S GMT%z (X)"
     )
-
-
-def test_mask_missing_treatments_key_errors():
-    """Reference parity: mask metadata without 'treatments' is a stage error
-    (MaskDataTransform.scala:131)."""
-    import pytest
-    from pyspark.sql import types as Tp
-    from arc_maskdata_pipeline_plugin_spark.operators.mask import compile_mask_expressions
-
-    schema = Tp.StructType(
-        [Tp.StructField("c", Tp.StringType(), metadata={"mask": {"nope": 1}})]
-    )
-    with pytest.raises(ValueError, match="missing treatments key"):
-        compile_mask_expressions(schema, "v")
-
-
-def test_mask_non_object_metadata_errors():
-    """Reference parity: non-object 'mask' metadata is a stage error
-    (MaskDataTransform.scala:134)."""
-    import pytest
-    from pyspark.sql import types as Tp
-    from arc_maskdata_pipeline_plugin_spark.operators.mask import compile_mask_expressions
-
-    schema = Tp.StructType(
-        [Tp.StructField("c", Tp.StringType(), metadata={"mask": "mask_string"})]
-    )
-    with pytest.raises(ValueError, match="invalid type"):
-        compile_mask_expressions(schema, "v")
 
 
 def test_inject_parameters_missing_param_errors():
